@@ -481,6 +481,13 @@ def jaccard_on_pairs(
     parallelize past the single scan split, and because the two legs'
     repartition subtrees are identical, ReuseExchange ships the text
     once.  No-op at real scale where the scan out-splits the cores.
+
+    Precondition: ``df`` should be a NARROW plan (a scan plus
+    projections/filters, no exchange).  The spread decision calls
+    ``df.rdd.getNumPartitions()``, which on a plan with exchanges
+    materializes its query stages eagerly, at call time and outside the
+    caller's own action.  Persist or checkpoint such an input before
+    calling.
     """
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
     sc = df.sparkSession.sparkContext

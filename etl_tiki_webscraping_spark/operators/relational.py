@@ -696,11 +696,12 @@ def _deletion_variant_rows(
     array drops the row, same as the expression form).
 
     ``keep_cols`` limits which INPUT columns ride the exploded output
-    (default: all).  Everything emitted crosses the Python->JVM Arrow
-    boundary ~170x per input row, so a caller that only needs the id
-    and block keys downstream should not ship the name with every
-    variant (guide §4: pass only the columns the function needs —
-    r17, measured on the entity-match path).
+    (default: all; a name not in ``df.columns`` raises ``ValueError``).
+    Everything emitted crosses the Python->JVM Arrow boundary ~170x per
+    input row, so a caller that only needs the id and block keys
+    downstream should not ship the name with every variant (guide §4:
+    pass only the columns the function needs — r17, measured on the
+    entity-match path).
     """
     import pandas as pd
 
@@ -709,6 +710,13 @@ def _deletion_variant_rows(
             "deletion neighborhoods support max_distance in {1, 2}; "
             f"got {max_distance} (C(L, k) variants per row explodes past 2)"
         )
+    if keep_cols is not None:
+        unknown = [c for c in keep_cols if c not in df.columns]
+        if unknown:
+            raise ValueError(
+                f"keep_cols names unknown column(s) {unknown}; "
+                f"input columns: {df.columns}"
+            )
     fields = (
         df.schema.fields
         if keep_cols is None

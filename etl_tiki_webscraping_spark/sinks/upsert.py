@@ -25,20 +25,53 @@ Three strategies (SURVEY §2.9 W2a-c):
       native; works on any store that supports atomic overwrite)
 
 Scale note: (c) is one broadcast-or-shuffled anti join plus a union —
-the same shape Delta's MERGE file-rewrite does under the hood.  For
-100 TB targets, partition the target (``partition_by=...``):
-``upsert_parquet`` then rewrites ONLY the partitions the update batch
-touches.  Each snapshot is a hive-layout directory whose per-partition
-entries are references (symlinks locally; manifest entries in the
-committed ``vN.json``) into an append-only ``data/`` pool, so a 1 GB
-daily batch against a 100 TB table copies ~1 GB, not 100 TB, while
-untouched partitions are carried forward by reference at zero I/O.
-See :func:`upsert_parquet` for the commit protocol.
+the same shape Delta's MERGE file-rewrite does under the hood.
+
+Commit protocol.  Every write to a snapshot table stages a new
+snapshot and publishes it the same way (:func:`_attempt`).  Rewrites
+(upsert, delete, update, apply-changes, compaction, repartition) share
+one copy-on-write path (:func:`_commit`); restore, clone and
+merge-on-read commits link the existing files forward instead.  A table
+dir holds::
+
+    <target>/_LATEST          "v00000007": the committed version
+    <target>/v00000007/       its snapshot
+    <target>/v00000007.json   its manifest
+    <target>/data/<pool>/     data pools (partitioned tables only)
+
+A commit rewrites the slice of the table it touches.  Unpartitioned,
+the slice is the whole table and the snapshot dir holds its parquet
+files directly.  Partitioned (``partition_by=...``), the slice is the
+touched partitions: they are written into a new ``data/`` pool dir, and
+the snapshot dir is a hive-layout farm of per-partition symlinks — into
+the new pool for rewritten partitions, into older pools for untouched
+ones, which carry forward at zero I/O (a 1 GB daily batch against a
+100 TB table writes ~1 GB, not 100 TB).  Either layout may also hold
+``_changes/`` (the commit's change feed) and ``_dv/`` (deletion
+vectors), hidden from table reads by the underscore prefix.
+
+Manifest keys: ``version``; ``attempt`` (the staging name that wrote
+it); ``schema`` (the authoritative table schema, so reads null-fill
+files written before an additive evolution); ``file_stats`` (per-file
+min/max for data skipping).  Partitioned snapshots add ``partition_by``
+and ``partitions`` (partition dir -> pool dir: the references an
+object-store port reads instead of symlinks); merge-on-read commits add
+``deletion_vectors``, restores ``restored_from``, clones
+``cloned_from``.
+
+An attempt writes its snapshot dir, pool and manifest under an
+attempt-unique staging name, then claims version N with an O_EXCL
+``vN.claim`` token, renames its staging onto ``vN``/``vN.json``,
+re-checks ownership and swaps ``_LATEST``.  A writer whose base version
+moved meanwhile gets ``ConcurrentWriteError`` (``retry_conflicts``
+rebases); a commit that does not land removes its staging at once;
+snapshots older than the retention window are pruned after the swap.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -230,28 +263,64 @@ def _current_snapshot(target_path: str) -> str | None:
     return None
 
 
-def _read_snapshot(spark: SparkSession, target_path: str, snap_name: str) -> DataFrame:
-    """Read one committed snapshot.  If its manifest records a table
-    schema (written by partitioned commits), apply it explicitly: after
-    additive schema evolution the pool holds files written under OLDER
-    schemas, and an explicit read schema makes parquet null-fill their
-    missing columns — the Delta approach, no footer-merging pass."""
+def _read_manifest(target_path: str, snap_name: str) -> "tuple[dict, T.StructType | None]":
+    """A snapshot's ``vN.json`` manifest (``{}`` when it has none) and
+    the table schema it records (None when it records none)."""
     import json
     import os
 
+    mpath = os.path.join(target_path, snap_name + ".json")
+    if not os.path.exists(mpath):
+        return {}, None
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    schema_json = manifest.get("schema")
+    return manifest, T.StructType.fromJson(json.loads(schema_json)) if schema_json else None
+
+
+def _scan(
+    spark: SparkSession,
+    snap_dir: str,
+    schema: "T.StructType | None",
+    files: "list[str] | None" = None,
+) -> DataFrame:
+    """Parquet scan of a snapshot dir (or of some of its data files)
+    under the manifest schema when there is one: after additive schema
+    evolution the pool holds files written under OLDER schemas, and an
+    explicit read schema makes parquet null-fill their missing columns
+    — the Delta approach, no footer-merging pass.  Deletion vectors are
+    NOT applied (see :func:`_maybe_apply_dv`)."""
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    if files is None:
+        return reader.parquet(snap_dir)
+    return reader.option("basePath", snap_dir).parquet(*files)
+
+
+def _read_snapshot(spark: SparkSession, target_path: str, snap_name: str) -> DataFrame:
+    """Read one committed (or staged) snapshot: manifest-schema scan
+    with its deletion vectors applied."""
+    import os
+
     snap_dir = os.path.join(target_path, snap_name)
-    mpath = snap_dir + ".json"
-    df = None
-    if os.path.exists(mpath):
-        with open(mpath) as fh:
-            manifest = json.load(fh)
-        schema_json = manifest.get("schema")
-        if schema_json:
-            schema = T.StructType.fromJson(json.loads(schema_json))
-            df = spark.read.schema(schema).parquet(snap_dir)
-    if df is None:
-        df = spark.read.parquet(snap_dir)
-    return _maybe_apply_dv(spark, snap_dir, df)
+    schema = _read_manifest(target_path, snap_name)[1]
+    return _maybe_apply_dv(spark, snap_dir, _scan(spark, snap_dir, schema))
+
+
+def _data_files(snap_dir: str) -> "Iterator[str]":
+    """Paths of a snapshot's data files, following a partitioned
+    snapshot's farm links into the ``data/`` pool.  Never descends into
+    ``_``/``.`` dirs (``_changes``, ``_dv``, ``_bloom``): Spark's reader
+    hides underscore-prefixed path segments, and an explicit file list
+    must match that contract — a change-feed or deletion-vector parquet
+    surfacing here would read junk rows into the table under the table
+    schema."""
+    import os
+
+    for root, dirs, files in os.walk(snap_dir, followlinks=True):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                yield os.path.join(root, f)
 
 
 def _file_meta_cols(df: DataFrame) -> DataFrame:
@@ -276,21 +345,29 @@ def _file_meta_cols(df: DataFrame) -> DataFrame:
     )
 
 
-def _maybe_apply_dv(spark: SparkSession, snap_dir: str, df: DataFrame) -> DataFrame:
-    """Merge-on-read: if this snapshot carries deletion vectors,
-    anti-join them out of the scan on (file basename, row index).  The
-    DV side is commonly tiny (it holds one row per deleted ROW, not per
-    retained row) and broadcasts; reads of DV-free snapshots pay
-    nothing.  Rewriting commits (upsert, compaction) purge the vectors,
-    exactly Delta's DV lifecycle."""
+def _dv_coords(spark: SparkSession, snap_dir: str) -> "DataFrame | None":
+    """A snapshot's deletion vectors as ``(__dv_file, __dv_idx)`` rows
+    (the :func:`_file_meta_cols` names), or None when it has none."""
     import os
 
     dv_dir = os.path.join(snap_dir, _DV_DIR)
     if not os.path.isdir(dv_dir):
-        return df
-    dv = spark.read.parquet(dv_dir).select(
+        return None
+    return spark.read.parquet(dv_dir).select(
         F.col("file").alias("__dv_file"), F.col("row_index").alias("__dv_idx")
     )
+
+
+def _maybe_apply_dv(spark: SparkSession, snap_dir: str, df: DataFrame) -> DataFrame:
+    """Merge-on-read: if this snapshot carries deletion vectors,
+    anti-join them out of the scan on (file path, row index).  The
+    DV side is commonly tiny (it holds one row per deleted ROW, not per
+    retained row) and broadcasts; reads of DV-free snapshots pay
+    nothing.  Rewriting commits (upsert, compaction) purge the vectors,
+    exactly Delta's DV lifecycle."""
+    dv = _dv_coords(spark, snap_dir)
+    if dv is None:
+        return df
     return (
         _file_meta_cols(df)
         .join(dv, on=["__dv_file", "__dv_idx"], how="left_anti")
@@ -316,7 +393,6 @@ def table_history(spark: SparkSession, target_path: str) -> DataFrame:
     rows until a rewriting commit folds them out (same caveat as
     Delta's numRecords under DVs).
     """
-    import json
     import os
 
     import pyarrow.parquet as pq
@@ -333,20 +409,9 @@ def table_history(spark: SparkSession, target_path: str) -> DataFrame:
             or not os.path.isdir(snap_dir)
         ):
             continue
-        files: list[str] = []
-        for root, dirs, fs in os.walk(snap_dir, followlinks=True):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            files += [
-                os.path.join(root, f)
-                for f in fs
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
+        files = list(_data_files(snap_dir))
         n_rows = sum(pq.read_metadata(f).num_rows for f in files)
-        partition_by: list[str] = []
-        mpath = snap_dir + ".json"
-        if os.path.exists(mpath):
-            with open(mpath) as fh:
-                partition_by = json.load(fh).get("partition_by") or []
+        partition_by = _read_manifest(target_path, entry)[0].get("partition_by") or []
         rows.append(
             (
                 int(entry.lstrip("v")),
@@ -394,26 +459,15 @@ def table_files(
     snap_dir = os.path.join(target_path, name)
     pcols = list(partition_cols or [])
     rows = []
-    for root, dirs, files in os.walk(snap_dir, followlinks=True):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for f in files:
-            if not f.endswith(".parquet") or f.startswith((".", "_")):
-                continue
-            full = os.path.join(root, f)
-            rel_dir = os.path.relpath(root, snap_dir)
-            row = [
-                os.path.join("" if rel_dir == "." else rel_dir, f),
-                None if rel_dir == "." else rel_dir,
-                pq.read_metadata(full).num_rows,
-                os.path.getsize(full),
-            ]
-            if pcols:
-                # decode hive dir values with the engine's own decoder so
-                # escaping/null-sentinel handling matches the write path
-                row += list(_dir_to_values(rel_dir, pcols)) if rel_dir != "." else [
-                    None
-                ] * len(pcols)
-            rows.append(tuple(row))
+    for full in _data_files(snap_dir):
+        rel = os.path.relpath(full, snap_dir)
+        rel_dir = os.path.dirname(rel)
+        row = [rel, rel_dir or None, pq.read_metadata(full).num_rows, os.path.getsize(full)]
+        if pcols:
+            # decode hive dir values with the engine's own decoder so
+            # escaping/null-sentinel handling matches the write path
+            row += list(_dir_to_values(rel_dir, pcols)) if rel_dir else [None] * len(pcols)
+        rows.append(tuple(row))
     schema = "file string, partition string, n_rows bigint, size_bytes bigint"
     for c in pcols:
         schema += f", {c} string"
@@ -487,9 +541,7 @@ def restore_table(
     both versions.  Without it the restored commit has no ``_changes``
     entry and feed reads spanning it refuse (the documented gap
     behavior).  Returns the new version number."""
-    import json
     import os
-    import shutil
 
     if version is None and as_of is None:
         raise ValueError("restore_table requires version or as_of")
@@ -498,22 +550,14 @@ def restore_table(
         raise FileNotFoundError(f"no committed snapshot table at {target_path}")
     src_name = _resolve_snapshot_name(target_path, version, as_of)
     next_version = int(cur.lstrip("v")) + 1
-    stage = _stage_base(next_version)
-    stage_dir = os.path.join(target_path, stage)
-    committed = False
-    try:
+    with _attempt(target_path, next_version, keep_snapshots) as stage:
+        stage_dir = os.path.join(target_path, stage)
         _link_snapshot_tree(
             os.path.join(target_path, src_name), stage_dir, resolve_links=False
         )
-        with open(os.path.join(target_path, src_name + ".json")) as fh:
-            manifest = json.load(fh)
-        manifest["version"] = next_version
-        manifest["attempt"] = stage  # ownership check at publish
+        manifest = _read_manifest(target_path, src_name)[0]
         manifest["restored_from"] = int(src_name.lstrip("v"))
-        mpath = os.path.join(target_path, stage + ".json")
-        with open(mpath + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(mpath + ".tmp", mpath)
+        _write_manifest(target_path, stage, manifest)
         if change_feed:
             restored = _read_snapshot(spark, target_path, stage)
             current = _read_snapshot(spark, target_path, cur)
@@ -532,16 +576,7 @@ def restore_table(
                 restored.exceptAll(aligned), "insert", next_version
             ).unionByName(_tag_changes(aligned.exceptAll(restored), "delete", next_version))
             feed.write.mode("overwrite").parquet(os.path.join(stage_dir, "_changes"))
-        _publish_staged(target_path, next_version, stage, keep_snapshots)
-        committed = True
-        return next_version
-    finally:
-        if not committed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(target_path, stage + ".json"))
-            except OSError:
-                pass
+    return next_version
 
 
 def vacuum_table(
@@ -633,9 +668,7 @@ def clone_table(
     way): VACUUM on a partitioned SOURCE can reclaim pool dirs a clone
     still references — see :func:`vacuum_table`.  ``version``/``as_of``
     clone a retained older snapshot instead of the current one."""
-    import json
     import os
-    import shutil
 
     if os.path.isdir(dest_path) and os.listdir(dest_path):
         raise FileExistsError(f"clone destination {dest_path} is not empty")
@@ -648,17 +681,13 @@ def clone_table(
         else cur
     )
     os.makedirs(dest_path, exist_ok=True)
-    stage = _stage_base(1)
-    stage_dir = os.path.join(dest_path, stage)
-    committed = False
-    try:
+    with _attempt(dest_path, 1, keep_snapshots) as stage:
         _link_snapshot_tree(
-            os.path.join(source_path, src_name), stage_dir, resolve_links=True
+            os.path.join(source_path, src_name),
+            os.path.join(dest_path, stage),
+            resolve_links=True,
         )
-        with open(os.path.join(source_path, src_name + ".json")) as fh:
-            manifest = json.load(fh)
-        manifest["version"] = 1
-        manifest["attempt"] = stage
+        manifest = _read_manifest(source_path, src_name)[0]
         manifest["cloned_from"] = {
             "path": os.path.realpath(source_path),
             "version": int(src_name.lstrip("v")),
@@ -669,19 +698,7 @@ def clone_table(
                 rel: os.path.realpath(os.path.join(source_path, d))
                 for rel, d in manifest["partitions"].items()
             }
-        mpath = os.path.join(dest_path, stage + ".json")
-        with open(mpath + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(mpath + ".tmp", mpath)
-        _publish_staged(dest_path, 1, stage, keep_snapshots)
-        committed = True
-    finally:
-        if not committed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(dest_path, stage + ".json"))
-            except OSError:
-                pass
+        _write_manifest(dest_path, stage, manifest)
 
 
 def repartition_table(
@@ -707,16 +724,13 @@ def repartition_table(
         raise FileNotFoundError(f"no committed snapshot table at {target_path}")
     df = _read_snapshot(spark, target_path, cur)
     next_version = int(cur.lstrip("v")) + 1
-    if partition_by:
-        pcols = list(partition_by)
-        missing = [c for c in pcols if c not in df.columns]
-        if missing:
-            raise ValueError(f"partition columns {missing} not in table schema")
-        # prior_entries={}: every partition of the new layout is freshly
-        # written — nothing carries forward across a layout change
-        _commit_partitioned(df, target_path, next_version, pcols, {}, keep_snapshots)
-    else:
-        _commit_unpartitioned(df, target_path, next_version, keep_snapshots)
+    pcols = list(partition_by or [])
+    missing = [c for c in pcols if c not in df.columns]
+    if missing:
+        raise ValueError(f"partition columns {missing} not in table schema")
+    # no prior entries: every partition of the new layout is freshly
+    # written — nothing carries forward across a layout change
+    _commit(df, target_path, next_version, keep_snapshots, pcols)
     return next_version
 
 
@@ -836,35 +850,19 @@ def _bloom_pruned_read(
         return all(words[p // 64] & (1 << (p % 64)) != 0 for p in positions)
 
     snap_dir = os.path.join(target_path, snap_name)
-    all_files: list[str] = []
-    for root, dirs, files in os.walk(snap_dir, followlinks=True):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        all_files += [
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
     findex = index["files"]
     kept = []
-    for path in all_files:
+    for path in _data_files(snap_dir):
         words = findex.get(os.path.basename(path))
         if words is None or any(may_contain(words, ps) for ps in value_positions):
             kept.append(path)
     pred = F.col(col).isin(*[F.lit(v) for v in values])
-    manifest_path = os.path.join(target_path, snap_name + ".json")
-    schema = None
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as fh:
-            sj = json.load(fh).get("schema")
-        if sj:
-            schema = T.StructType.fromJson(json.loads(sj))
+    schema = _read_manifest(target_path, snap_name)[1]
     if not kept:
         if schema is None:
             return None
         return spark.createDataFrame([], schema).filter(pred)
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.option("basePath", snap_dir).parquet(*kept)
-    return _maybe_apply_dv(spark, snap_dir, df).filter(pred)
+    return _maybe_apply_dv(spark, snap_dir, _scan(spark, snap_dir, schema, kept)).filter(pred)
 
 
 def _resolve_snapshot_name(
@@ -1016,30 +1014,15 @@ def _stats_pruned_read(
     """File-skipping read of one snapshot under a range predicate, or
     None when the manifest offers nothing to skip (caller falls back to
     the ordinary full read + filter)."""
-    import json
     import os
 
     conjuncts = _range_conjuncts(range_filter)
-    mpath = os.path.join(target_path, snap_name + ".json")
-    if not os.path.exists(mpath):
-        return None
-    with open(mpath) as fh:
-        manifest = json.load(fh)
+    manifest, schema = _read_manifest(target_path, snap_name)
     stats = manifest.get("file_stats") or {}
     if not stats:
         return None
     snap_dir = os.path.join(target_path, snap_name)
-    all_files: list[str] = []
-    for root, dirs, files in os.walk(snap_dir, followlinks=True):
-        # never descend into metadata dirs (_changes, _dv, _bloom):
-        # Spark's own reader hides underscore-prefixed path segments,
-        # and the explicit file list must match that contract — a
-        # change-feed or deletion-vector parquet surfacing here would
-        # read junk rows into the table under the table schema
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                all_files.append(os.path.relpath(os.path.join(root, f), snap_dir))
+    all_files = [os.path.relpath(f, snap_dir) for f in _data_files(snap_dir)]
 
     def survives(rel: str) -> bool:
         # a file is skipped when ANY conjunct proves it can't overlap
@@ -1063,16 +1046,11 @@ def _stats_pruned_read(
     kept = [f for f in all_files if survives(f)]
     if len(kept) == len(all_files):
         return None  # nothing skippable; use the standard read path
-    schema_json = manifest.get("schema")
-    schema = T.StructType.fromJson(json.loads(schema_json)) if schema_json else None
     if not kept:
         if schema is None:
             return None
         return _apply_range(spark.createDataFrame([], schema), range_filter)
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.option("basePath", snap_dir).parquet(
-        *[os.path.join(snap_dir, f) for f in kept]
-    )
+    df = _scan(spark, snap_dir, schema, [os.path.join(snap_dir, f) for f in kept])
     return _apply_range(_maybe_apply_dv(spark, snap_dir, df), range_filter)
 
 
@@ -1341,54 +1319,151 @@ def _publish_staged(
             pass
 
 
-def _commit_unpartitioned(
-    df: DataFrame,
-    target_path: str,
-    next_version: int,
-    keep_snapshots: int,
-    audit: "object | None" = None,
-    changes_builder: "object | None" = None,
-) -> None:
-    """Stage + publish an UNPARTITIONED snapshot: full result written
-    under an attempt-unique name, manifest (schema + per-file min/max),
-    optional write-audit-publish gate, then the claim + pointer swap.
-
-    ``changes_builder`` (change data feed): a callable receiving the
-    JUST-STAGED snapshot as a DataFrame and returning the commit's
-    change rows.  Building from the staged files means the merge
-    lineage is never executed twice — the feed costs one read of the
-    bytes this commit just wrote (plus the builder's own pruned reads),
-    not a second full merge."""
+@contextmanager
+def _attempt(target_path: str, next_version: int, keep_snapshots: int) -> "Iterator[str]":
+    """The staging lifecycle every commit rides.  Yields an
+    attempt-unique stage name (:func:`_stage_base`); the body writes the
+    snapshot under it (``<stage>/``, plus the ``data/`` pool dir
+    :func:`_pool_name` derives from it) and its manifest
+    (:func:`_write_manifest`).  When the body returns, the attempt
+    claims its version and swaps the pointer (:func:`_publish_staged`).
+    If the commit does not land (audit rejection, concurrent-writer
+    loss, any exception), the attempt's snapshot dir, manifest and pool
+    are removed at once: they are exclusively this attempt's, so no
+    other writer is affected."""
     import os
     import shutil
 
     stage = _stage_base(next_version)
-    stage_dir = os.path.join(target_path, stage)
     committed = False
     try:
-        df.write.mode("overwrite").parquet(stage_dir)
-        _write_snapshot_manifest(target_path, stage, df.schema.json())
-        if changes_builder is not None:
-            staged = df.sparkSession.read.schema(df.schema).parquet(stage_dir)
-            # inside the staged snapshot dir: rides the same claim +
-            # pointer swap; '_' prefix hides it from ordinary table reads
-            changes_builder(staged).write.mode("overwrite").parquet(
-                os.path.join(stage_dir, "_changes")
-            )
-        if audit is not None:
-            # write-audit-publish: validate the written-but-uncommitted
-            # snapshot; raising aborts before the claim
-            audit(df.sparkSession.read.parquet(stage_dir))
+        yield stage
         _publish_staged(target_path, next_version, stage, keep_snapshots)
         committed = True
     finally:
         if not committed:
-            # attempt-scoped staging is exclusively ours — reclaim now
-            shutil.rmtree(stage_dir, ignore_errors=True)
+            shutil.rmtree(os.path.join(target_path, stage), ignore_errors=True)
+            shutil.rmtree(
+                os.path.join(target_path, "data", _pool_name(stage)), ignore_errors=True
+            )
             try:
-                os.remove(stage_dir + ".json")
+                os.remove(os.path.join(target_path, stage + ".json"))
             except OSError:
                 pass
+
+
+def _write_manifest(target_path: str, stage: str, manifest: dict) -> None:
+    """Write an attempt's manifest under its stage name, stamped with
+    the version (the stage name's numeric prefix) and the ``attempt``
+    name :func:`_publish_staged` checks ownership against."""
+    import json
+    import os
+
+    version = int(stage.lstrip("v").split(".", 1)[0])
+    manifest = {**manifest, "version": version, "attempt": stage}
+    mpath = os.path.join(target_path, stage + ".json")
+    with open(mpath + ".tmp", "w") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True)
+    os.replace(mpath + ".tmp", mpath)
+
+
+def _commit(
+    df: DataFrame,
+    target_path: str,
+    next_version: int,
+    keep_snapshots: int,
+    pcols: Sequence[str] = (),
+    prior_entries: "dict[str, str] | None" = None,
+    drop_values: "set[tuple] | None" = None,
+    audit: "object | None" = None,
+    changes_builder: "object | None" = None,
+) -> None:
+    """Copy-on-write commit of snapshot ``next_version`` from ``df``,
+    the rewritten slice of the table (see :func:`_touched_slice`).
+
+    With no partition columns the slice is the whole table and its
+    files are written straight into the snapshot dir.  With ``pcols``,
+    ``df`` holds the touched partitions only: they are written into a
+    new ``data/`` pool dir, and the snapshot dir is a hive-layout farm
+    of per-partition symlinks — fresh partitions point into the new
+    pool, and every ``prior_entries`` partition not superseded
+    (``drop_values`` names each touched partition, including ones the
+    rewrite left empty, which must vanish rather than resurrect) points
+    where the previous snapshot's did, at zero copy.  Hive partition
+    discovery, and with it PartitionFilters pruning, works on the farm
+    unchanged; ``vN.json`` is the authoritative metadata an object-store
+    port would read instead of symlinks.
+
+    Then, for both layouts: the change feed (``changes_builder``
+    receives the JUST-WRITTEN files, so the merge lineage never runs
+    twice), the manifest, the write-audit-publish gate (``audit`` gets
+    the staged candidate table; raising aborts before the claim), and
+    claim + pointer swap (:func:`_attempt`).  Every crash point leaves
+    the previous snapshot fully readable."""
+    import os
+    import shutil
+
+    pcols = list(pcols)
+    with _attempt(target_path, next_version, keep_snapshots) as stage:
+        stage_dir = os.path.join(target_path, stage)
+        written = os.path.join(target_path, "data", _pool_name(stage)) if pcols else stage_dir
+        df.write.mode("overwrite").partitionBy(*pcols).parquet(written)
+        fresh = {
+            rel: os.path.realpath(os.path.join(written, rel))
+            for rel in _leaf_partition_dirs(written, len(pcols))
+        }
+        carried = {
+            rel: d
+            for rel, d in (prior_entries or {}).items()
+            if rel not in fresh and _dir_to_values(rel, pcols) not in (drop_values or ())
+        }
+        entries = {**carried, **fresh}
+        if pcols:
+            os.makedirs(stage_dir)
+            for rel, data_dir in entries.items():
+                link = os.path.join(stage_dir, rel)
+                os.makedirs(os.path.dirname(link), exist_ok=True)
+                os.symlink(os.path.relpath(data_dir, os.path.dirname(link)), link)
+
+        # per-file min/max for data skipping: fresh files get their footer
+        # stats read now (driver-side, bounded by the batch's file count —
+        # the metadata a Delta commit collects); carried files keep their
+        # PRIOR manifest stats verbatim (same bytes, same ranges)
+        file_stats: dict[str, dict] = {}
+        for rel, data_dir in fresh.items():
+            file_stats.update(_dir_file_stats(data_dir, rel))
+        if carried:
+            prev = f"v{next_version - 1:08d}"
+            prior_stats = _read_manifest(target_path, prev)[0].get("file_stats") or {}
+            for rel in carried:
+                pref = rel + os.sep
+                file_stats.update({k: v for k, v in prior_stats.items() if k.startswith(pref)})
+            # deletion vectors on carried files must carry too, or their
+            # merge-on-read deletes would resurrect; rows naming rewritten
+            # files go stale harmlessly (new pool paths never match).  A
+            # full rewrite carries nothing and so purges the vectors.
+            prev_dv = os.path.join(target_path, prev, _DV_DIR)
+            if os.path.isdir(prev_dv):
+                shutil.copytree(prev_dv, os.path.join(stage_dir, _DV_DIR), copy_function=os.link)
+
+        if changes_builder is not None:
+            # the explicit schema stops hive re-inference of partition
+            # columns; the '_' prefix hides the dir from table reads,
+            # partition discovery and file stats, and it renames into the
+            # version path with the snapshot dir at claim time
+            staged = df.sparkSession.read.schema(df.schema).parquet(written)
+            changes_builder(staged).write.mode("overwrite").parquet(
+                os.path.join(stage_dir, "_changes")
+            )
+        manifest = {"schema": df.schema.json(), "file_stats": file_stats}
+        if pcols:
+            manifest["partition_by"] = pcols
+            manifest["partitions"] = {
+                rel: os.path.relpath(d, target_path) for rel, d in entries.items()
+            }
+        _write_manifest(target_path, stage, manifest)
+        if audit is not None:
+            audit(_read_snapshot(df.sparkSession, target_path, stage))
 
 
 def _prune_snapshots(target_path: str, next_version: int, keep_snapshots: int) -> None:
@@ -1526,192 +1601,11 @@ def _normalize_value(v: object) -> str | None:
     return str(v)
 
 
-def _commit_partitioned(
-    merged: DataFrame,
-    target_path: str,
-    next_version: int,
-    pcols: Sequence[str],
-    prior_entries: dict[str, str],
-    keep_snapshots: int,
-    drop_values: "set[tuple] | None" = None,
-    audit: "object | None" = None,
-    changes_builder: "object | None" = None,
-) -> None:
-    """Staging-lifecycle wrapper around :func:`_commit_partitioned_staged`:
-    generates the attempt-unique staging name and, if the commit does
-    not land (audit rejection, concurrent-writer loss, crash-path
-    exception), reclaims this attempt's farm/manifest/pool immediately
-    — they are exclusively ours, so no other writer can be affected."""
-    import os
-    import shutil
-
-    stage = _stage_base(next_version)
-    committed = False
-    try:
-        _commit_partitioned_staged(
-            merged,
-            target_path,
-            next_version,
-            pcols,
-            prior_entries,
-            keep_snapshots,
-            drop_values,
-            audit,
-            stage,
-            changes_builder,
-        )
-        committed = True
-    finally:
-        if not committed:
-            shutil.rmtree(os.path.join(target_path, stage), ignore_errors=True)
-            try:
-                os.remove(os.path.join(target_path, stage + ".json"))
-            except OSError:
-                pass
-            shutil.rmtree(os.path.join(target_path, "data", _pool_name(stage)), ignore_errors=True)
-
-
 def _pool_name(stage: str) -> str:
     """data/ pool dir name for an attempt's staging name — permanently
     attempt-unique (the manifest records the mapping, so the name never
     needs to be the bare version number)."""
     return stage.lstrip("v").replace(".stage-", "-")
-
-
-def _commit_partitioned_staged(
-    merged: DataFrame,
-    target_path: str,
-    next_version: int,
-    pcols: Sequence[str],
-    prior_entries: dict[str, str],
-    keep_snapshots: int,
-    drop_values: "set[tuple] | None",
-    audit: "object | None",
-    stage: str,
-    changes_builder: "object | None" = None,
-) -> None:
-    """Write ``merged`` (the touched partitions only) into a new
-    ``data/`` pool dir, then build snapshot ``vN`` as a hive-layout farm
-    of per-partition references: freshly-written partitions point at the
-    new pool dir, untouched ones at the same pool dirs the previous
-    snapshot referenced (zero copy).  Locally the references are
-    symlinks so Spark's ordinary hive partition discovery — and
-    therefore PartitionFilters pruning — works unchanged; the
-    authoritative commit metadata is ``vN.json`` (partition -> pool
-    path), which is what an object-store port would read instead of
-    symlinks.  Commit order: pool write -> farm build -> manifest ->
-    audit -> claim (rename farm into the version path) -> pointer swap;
-    every crash point leaves the previous snapshot fully readable, and
-    all pre-claim artifacts live under attempt-unique names so a losing
-    concurrent writer never touches a winner's committed files."""
-    import json
-    import os
-    import shutil
-
-    # attempt-unique pool name: two writers racing toward the same
-    # next_version cannot overwrite each other's data files; an
-    # abandoned pool dir is never referenced by any manifest and is
-    # reclaimed by the wrapper (or pruning, after a crash)
-    pool_dir = os.path.join(target_path, "data", _pool_name(stage))
-    merged.write.mode("overwrite").partitionBy(*pcols).parquet(pool_dir)
-
-    entries = dict(prior_entries)
-    if drop_values:
-        # every TOUCHED partition's prior entry is superseded — including
-        # ones the merge left EMPTY (all their rows moved/deleted), which
-        # produce no new dir and must vanish from the manifest rather
-        # than resurrect their stale data by carry-forward
-        entries = {
-            rel: d
-            for rel, d in entries.items()
-            if _dir_to_values(rel, pcols) not in drop_values
-        }
-    for rel in _leaf_partition_dirs(pool_dir, len(pcols)):
-        entries[rel] = os.path.realpath(os.path.join(pool_dir, rel))
-
-    farm_stage = os.path.join(target_path, stage)
-    shutil.rmtree(farm_stage, ignore_errors=True)
-    os.makedirs(farm_stage)
-    for rel, data_dir in entries.items():
-        link = os.path.join(farm_stage, rel)
-        os.makedirs(os.path.dirname(link), exist_ok=True)
-        os.symlink(os.path.relpath(data_dir, os.path.dirname(link)), link)
-
-    # deletion vectors: when any prior partition carries forward BY
-    # REFERENCE, its files' DV rows must carry too or merge-on-read
-    # deletes would resurrect in untouched partitions.  Rows naming
-    # REWRITTEN files go stale harmlessly (new pool basenames never
-    # match).  A full rewrite (no carried references — compaction,
-    # layout evolution) purges the vectors instead.
-    prev_dv = os.path.join(target_path, f"v{next_version - 1:08d}", _DV_DIR)
-    if next_version > 1 and os.path.isdir(prev_dv):
-        pool_real_now = os.path.realpath(pool_dir)
-        carried = any(
-            os.path.realpath(d) != pool_real_now
-            and not os.path.realpath(d).startswith(pool_real_now + os.sep)
-            for d in entries.values()
-        )
-        if carried:
-            shutil.copytree(
-                prev_dv, os.path.join(farm_stage, _DV_DIR), copy_function=os.link
-            )
-
-    if changes_builder is not None:
-        # feed rows derive from the JUST-WRITTEN pool files (the merged
-        # touched partitions) — the merge lineage never runs twice; the
-        # explicit schema stops hive re-inference of partition columns.
-        # Real dir among the symlinked partition dirs: '_' prefix keeps it
-        # out of partition discovery, farm scans, and manifest file stats;
-        # it renames into the version path with the farm at claim time
-        staged = merged.sparkSession.read.schema(merged.schema).parquet(pool_dir)
-        changes_builder(staged).write.mode("overwrite").parquet(
-            os.path.join(farm_stage, "_changes")
-        )
-
-    # per-file min/max for data skipping: freshly-written pool files get
-    # their footer stats read now (driver-side, bounded by the batch's
-    # file count — the same metadata a Delta commit collects); files
-    # carried forward by reference keep their PRIOR manifest stats
-    # verbatim (the bytes didn't change, so neither did the ranges)
-    prior_stats: dict[str, dict] = {}
-    prev_mpath = os.path.join(target_path, f"v{next_version - 1:08d}.json")
-    if next_version > 1 and os.path.exists(prev_mpath):
-        with open(prev_mpath) as fh:
-            prior_stats = json.load(fh).get("file_stats", {}) or {}
-    pool_real = os.path.realpath(pool_dir)
-    file_stats: dict[str, dict] = {}
-    for rel, data_dir in entries.items():
-        if os.path.realpath(data_dir).startswith(pool_real + os.sep) or (
-            os.path.realpath(data_dir) == pool_real
-        ):
-            file_stats.update(_dir_file_stats(data_dir, rel))
-        else:
-            pref = rel + os.sep
-            file_stats.update(
-                {k: v for k, v in prior_stats.items() if k.startswith(pref)}
-            )
-
-    manifest = {
-        "version": next_version,
-        "attempt": stage,  # ownership check at publish (_publish_staged)
-        "partition_by": list(pcols),
-        "schema": merged.schema.json(),  # authoritative table schema (evolution-safe reads)
-        "partitions": {rel: os.path.relpath(d, target_path) for rel, d in entries.items()},
-        "file_stats": file_stats,
-    }
-    mpath = os.path.join(target_path, stage + ".json")
-    with open(mpath + ".tmp", "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(mpath + ".tmp", mpath)
-
-    if audit is not None:
-        # write-audit-publish (Iceberg WAP): validate the fully-written,
-        # not-yet-committed snapshot (read via its STAGED name); a
-        # raising audit aborts BEFORE the claim, so readers keep the
-        # previous version and the staging is reclaimed immediately
-        audit(_read_snapshot(merged.sparkSession, target_path, stage))
-
-    _publish_staged(target_path, next_version, stage, keep_snapshots)
 
 
 def _parquet_file_stats(path: str) -> dict[str, list]:
@@ -1773,30 +1667,6 @@ def _dir_file_stats(data_dir: str, rel_prefix: str) -> dict[str, dict]:
     return out
 
 
-def _write_snapshot_manifest(target_path: str, snap_name: str, schema_json: str) -> None:
-    """Manifest for an UNPARTITIONED snapshot commit: authoritative
-    schema + per-file min/max stats, so :func:`read_parquet_table` can
-    skip whole files under a range predicate (``compact_table``'s
-    ``sort_by`` clustering produces disjoint per-file ranges — this is
-    the metadata half of that optimization)."""
-    import json
-    import os
-
-    snap_dir = os.path.join(target_path, snap_name)
-    # snap_name may be an attempt-staged name ("vNNNNNNNN.stage-…");
-    # the recorded version is always the numeric prefix
-    manifest = {
-        "version": int(snap_name.lstrip("v").split(".", 1)[0]),
-        "attempt": snap_name,  # ownership check at publish (_publish_staged)
-        "schema": schema_json,
-        "file_stats": _dir_file_stats(snap_dir, ""),
-    }
-    mpath = os.path.join(target_path, snap_name + ".json")
-    with open(mpath + ".tmp", "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(mpath + ".tmp", mpath)
-
-
 _TOUCHED_LITERAL_MAX = 256
 
 
@@ -1833,36 +1703,59 @@ def _rows_in_partitions(
     return snapshot.join(F.broadcast(t), on=cond, how="left_semi")
 
 
-def _touched_partitions(
+def _touched_slice(
     snapshot: DataFrame,
-    updates: DataFrame,
-    keys: Sequence[str],
     pcols: Sequence[str],
-    stable_partitions: bool,
-) -> DataFrame:
-    """The partition-value set an upsert batch requires rewriting.
+    rows: DataFrame,
+    stale_keys: "Sequence[str] | None" = None,
+) -> "tuple[DataFrame, set[tuple] | None]":
+    """The slice of ``snapshot`` a copy-on-write commit rewrites, and
+    the normalized values of its partitions (the ``drop_values`` that
+    :func:`_commit` supersedes).
 
-    Always includes the partitions the update rows land in.  When
-    ``stable_partitions`` is False (the safe default, matching Delta
-    MERGE's whole-table key matching), it ALSO includes partitions
-    currently holding OLD versions of the updated keys — otherwise a
-    row whose partition value changed would survive as a stale
-    duplicate in its old partition.  Locating those costs one
-    column-pruned scan of (keys, partition cols) over the snapshot —
-    a read-only pass, no write amplification.  Tables whose partition
-    value is functionally dependent on the key (date-partitioned
-    facts, the standard layout) should pass ``stable_partitions=True``
-    to skip that scan entirely."""
-    touched = updates.select(*pcols).distinct()
-    if not stable_partitions:
+    With no partition columns the slice is the whole snapshot: no Spark
+    job runs and there is nothing to drop.  Otherwise the touched
+    partitions are the ones ``rows`` fall in — plus, with
+    ``stale_keys``, the ones currently holding those keys, so a key
+    whose partition value CHANGED leaves no stale duplicate in its old
+    partition (Delta MERGE's whole-table key matching; one column-pruned
+    scan of keys + partition columns, read-only).  Their values are
+    collected — bounded by the number of touched partitions, the same
+    cardinality a Delta/Iceberg commit carries as metadata — and the
+    slice is read partition-pruned (:func:`_rows_in_partitions`).  Hive
+    reads may re-infer partition column types, so the slice's are cast
+    back to ``rows``' types before any merge."""
+    if not pcols:
+        return snapshot, None
+    touched = rows.select(*pcols).distinct()
+    if stale_keys:
         stale = (
-            snapshot.select(*keys, *pcols)  # column-pruned: keys + partition values only
-            .join(updates.select(*keys).distinct(), on=list(keys), how="left_semi")
+            snapshot.select(*stale_keys, *pcols)
+            .join(rows.select(*stale_keys).distinct(), on=list(stale_keys), how="left_semi")
             .select(*pcols)
             .distinct()
         )
         touched = touched.union(stale).distinct()
-    return touched
+    touched_rows = touched.collect()
+    drop_values = {tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows}
+    sliced = _rows_in_partitions(snapshot, touched_rows, touched.schema, pcols)
+    for pc in pcols:
+        sliced = sliced.withColumn(pc, F.col(pc).cast(rows.schema[pc].dataType))
+    return sliced, drop_values
+
+
+def _require_farm(target_path: str, snap_name: str, pcols: Sequence[str]) -> "dict[str, str]":
+    """The partition references a ``pcols``-partitioned snapshot carries
+    forward (``{}`` for an unpartitioned commit); raises when the
+    snapshot is not laid out on ``pcols``."""
+    import os
+
+    if not pcols:
+        return {}
+    entries = _farm_entries(os.path.join(target_path, snap_name), pcols)
+    if entries is None:
+        raise ValueError(f"{target_path} is not a {list(pcols)}-partitioned snapshot table")
+    return entries
 
 
 def upsert_parquet(
@@ -1915,37 +1808,24 @@ def upsert_parquet(
     gates (row counts, null ratios, FK checks) between write and
     publish.
 
-    Commit protocol: versioned snapshots + an atomically-swapped
-    pointer file (the single-writer core of what Delta/Iceberg do with
-    a transaction log):
-
-        <target>/_LATEST          -> "v00000007"   (the committed table)
-        <target>/v00000007/...    snapshot (see below)
-        <target>/v00000006/...    previous snapshot (time-travel window;
-                                   older snapshots pruned best-effort)
-
-    Unpartitioned tables: the merged result is fully written into a NEW
-    snapshot dir first; the commit is the pointer swap.  EVERY crash
-    point leaves a complete, committed table: before the swap readers
-    still see the old snapshot, after it the new one — there is no
-    window where the target is missing or half-written (the flaw of
-    delete-then-rename).  No POSIX rename of the data is required, so
-    the protocol works on object stores: the pointer swap maps to a
-    single-object PUT (atomic on S3/GCS) or a conditional put for
-    multi-writer safety; the prune maps to a batch delete.
-
-    Partitioned tables (``partition_by=...``) avoid the full-table
-    write amplification: only the partitions the update batch touches
-    are read (via a partition-pruned scan of the current snapshot),
-    merged, and rewritten into an append-only ``data/`` pool; the new
-    snapshot is a hive-layout dir of per-partition REFERENCES —
-    symlinks locally, ``vN.json`` manifest entries authoritatively —
-    so untouched partitions carry forward at zero I/O.  A 1 GB daily
-    batch against a 100 TB table therefore writes ~1 GB, not 100 TB,
-    which is the property Delta/Iceberg MERGE gets from file-level
-    rewrite (and the reference's row-level ``ON DUPLICATE KEY UPDATE``,
-    dags/etl.py:181-202, gets from B-tree page writes).  Read back via
-    :func:`read_parquet_table` — partition pruning (PartitionFilters)
+    Commit protocol (module docstring): the batch is merged against the
+    slice of the current snapshot it touches and committed as a new
+    snapshot; the pointer swap publishes it.  Every crash point leaves a
+    complete committed table — before the swap readers see the old
+    snapshot, after it the new one.  Unpartitioned, the slice is the
+    whole table and the new snapshot dir holds the merged files.
+    Partitioned (``partition_by=...``), only the partitions the batch
+    touches are read (partition-pruned), merged and written into a new
+    ``data/`` pool dir; the snapshot is a hive-layout farm of references
+    — symlinks locally, ``vN.json`` ``partitions`` entries
+    authoritatively — so untouched partitions carry forward at zero I/O,
+    the property Delta/Iceberg MERGE gets from file-level rewrite (and
+    the reference's row-level ``ON DUPLICATE KEY UPDATE``,
+    dags/etl.py:181-202, from B-tree page writes).  ``vN.json`` also
+    records the table ``schema`` and per-file ``file_stats``.  The
+    publish claims ``vN`` exclusively and swaps ``_LATEST`` (single PUT
+    / conditional PUT on an object store).  Read back via
+    :func:`read_parquet_table`; partition pruning (PartitionFilters)
     works unchanged because the snapshot dir is ordinary hive layout.
 
     A key's partition value may legitimately CHANGE in an update; by
@@ -1996,144 +1876,51 @@ def _upsert_parquet_attempt(
 ) -> None:
     import os
 
-    if partition_by:
-        _upsert_parquet_partitioned(
-            spark,
-            updates,
-            target_path,
-            keys,
-            order_by,
-            list(partition_by),
-            keep_snapshots,
-            stable_partitions,
-            evolve_schema,
-            audit,
-            change_feed,
-        )
-        return
-
+    pcols = list(partition_by or [])
     cur = _current_snapshot(target_path)
-    target: "DataFrame | None" = None
+    entries = None
     if cur is not None:
-        target = _read_snapshot(spark, target_path, cur)
-        merged = upsert_dataframes(target, updates, keys, order_by, evolve_schema)
+        snap = _read_snapshot(spark, target_path, cur)
+        if pcols:
+            entries = _farm_entries(os.path.join(target_path, cur), pcols)
         next_version = int(cur.lstrip("v")) + 1
     elif os.path.exists(target_path) and any(
         not e.startswith((".", "_")) for e in os.listdir(target_path)
     ):
         # legacy plain-parquet dir: upgrade in place to the snapshot layout
-        target = spark.read.parquet(target_path)
-        merged = upsert_dataframes(target, updates, keys, order_by, evolve_schema)
+        snap = spark.read.parquet(target_path)
         next_version = 1
     else:
-        merged = _dedup_updates(updates, keys, order_by)
+        snap = None
         next_version = 1
 
-    builder = (
-        (lambda staged: _change_rows(target, staged, updates, keys, next_version))
-        if change_feed
-        else None
-    )
-    _commit_unpartitioned(merged, target_path, next_version, keep_snapshots, audit, builder)
-
-
-def _upsert_parquet_partitioned(
-    spark: SparkSession,
-    updates: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_by: Sequence[Column | str] | None,
-    pcols: list[str],
-    keep_snapshots: int,
-    stable_partitions: bool,
-    evolve_schema: bool = False,
-    audit: "object | None" = None,
-    change_feed: bool = False,
-) -> None:
-    """Partition-pruned upsert: merge the update batch against ONLY the
-    partitions it touches; carry every other partition forward by
-    reference (see :func:`_commit_partitioned`)."""
-    import os
-
-    cur = _current_snapshot(target_path)
-    prior_entries: dict[str, str] = {}
-    drop_values: set[tuple] | None = None
-    prior: "DataFrame | None" = None  # pre-merge touched rows, for change_feed
-    if cur is not None:
-        cur_dir = os.path.join(target_path, cur)
-        entries = _farm_entries(cur_dir, pcols)
-        next_version = int(cur.lstrip("v")) + 1
-        if entries is None:
-            # legacy unpartitioned / re-partitioned snapshot: one-time full rewrite
-            target = _read_snapshot(spark, target_path, cur)
-            prior = target
-            merged = upsert_dataframes(
-                target,
-                updates if evolve_schema else updates.select(*target.columns),
-                keys,
-                order_by,
-                evolve_schema,
-            )
-        else:
-            prior_entries = entries
-            # manifest-schema read: pool files written before an additive
-            # evolution lack the newer columns and must null-fill them
-            snap = _read_snapshot(spark, target_path, cur)
-            touched_vals = _touched_partitions(
-                snap, updates, keys, pcols, stable_partitions
-            )
-            # bounded by the number of touched partitions — the same
-            # cardinality a Delta/Iceberg commit carries as metadata
-            touched_rows = touched_vals.collect()
-            drop_values = {
-                tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows
-            }
-            touched = _rows_in_partitions(snap, touched_rows, touched_vals.schema, pcols)
-            # hive reads append partition cols last and may re-infer their
-            # type; realign to the incoming batch's schema before merging
-            for pc in pcols:
-                touched = touched.withColumn(pc, F.col(pc).cast(updates.schema[pc].dataType))
-            if not evolve_schema:
-                # align the BATCH to the table, never the table to the
-                # batch: a narrower batch raises here (missing column)
-                # exactly like the unpartitioned path's
-                # updates.select(*target.columns) — silently narrowing
-                # `touched` instead would commit the touched partitions
-                # without the column AND record the narrowed schema as
-                # the manifest's authoritative one, losing the column
-                # for the whole table on every later read
-                updates = updates.select(*touched.columns)
-            prior = touched
-            merged = upsert_dataframes(touched, updates, keys, order_by, evolve_schema)
-    elif os.path.exists(target_path) and any(
-        not e.startswith((".", "_")) for e in os.listdir(target_path)
-    ):
-        target = spark.read.parquet(target_path)
-        prior = target
-        merged = upsert_dataframes(
-            target,
-            updates if evolve_schema else updates.select(*target.columns),
-            keys,
-            order_by,
-            evolve_schema,
+    prior: "DataFrame | None" = None  # pre-merge rows of the slice, for change_feed
+    drop_values = None
+    if snap is None:
+        merged = _dedup_updates(updates, keys, order_by)
+    else:
+        # without a farm to carry forward (unpartitioned, legacy, or laid
+        # out on other columns) the slice is the whole table: one full rewrite
+        prior, drop_values = _touched_slice(
+            snap,
+            pcols if entries is not None else [],
+            updates,
+            stale_keys=None if stable_partitions else keys,
         )
-        next_version = 1
-    else:
-        merged = _dedup_updates(updates, keys, order_by)
-        next_version = 1
+        merged = upsert_dataframes(prior, updates, keys, order_by, evolve_schema)
 
     builder = (
         (lambda staged: _change_rows(prior, staged, updates, keys, next_version))
         if change_feed
         else None
     )
-    _commit_partitioned(
+    _commit(
         merged,
         target_path,
         next_version,
-        pcols,
-        prior_entries,
         keep_snapshots,
+        pcols,
+        entries,
         drop_values,
         audit,
         builder,
@@ -2173,62 +1960,31 @@ def delete_where(
     ``compact_table``) purges the vectors by rewriting.  Works on both
     layouts; ``partition_by`` is ignored (nothing is rewritten).
     """
-    import os
-
     cur = _current_snapshot(target_path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {target_path}")
     next_version = int(cur.lstrip("v")) + 1
-
+    cond = F.coalesce(condition, F.lit(False))
     if deletion_vectors:
-        _delete_where_dv(
-            spark, target_path, cur, next_version, condition, keep_snapshots,
-            change_feed,
+        _commit_deletion_vectors(
+            spark, target_path, cur, next_version, cond, keep_snapshots, change_feed
         )
         return
+
     snap = _read_snapshot(spark, target_path, cur)
-
-    if not partition_by:
-        merged = snap.filter(~F.coalesce(condition, F.lit(False)))
-        # delete feed rows are by definition NOT in the staged result;
-        # deriving them is one more filtered scan of the prior snapshot
-        deletes = _tag_changes(
-            snap.filter(F.coalesce(condition, F.lit(False))), "delete", next_version
-        )
-        _commit_unpartitioned(
-            merged,
-            target_path,
-            next_version,
-            keep_snapshots,
-            changes_builder=(lambda staged: deletes) if change_feed else None,
-        )
-        return
-
-    pcols = list(partition_by)
-    entries = _farm_entries(os.path.join(target_path, cur), pcols)
-    if entries is None:
-        raise ValueError(
-            f"{target_path} is not a {pcols}-partitioned snapshot table"
-        )
-    touched_vals = (
-        snap.filter(F.coalesce(condition, F.lit(False))).select(*pcols).distinct()
-    )
-    touched_rows = touched_vals.collect()  # bounded by matching partitions
-    drop_values = {
-        tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows
-    }
-    touched = _rows_in_partitions(snap, touched_rows, touched_vals.schema, pcols)
-    merged = touched.filter(~F.coalesce(condition, F.lit(False)))
-    deletes = _tag_changes(
-        touched.filter(F.coalesce(condition, F.lit(False))), "delete", next_version
-    )
-    _commit_partitioned(
-        merged,
+    pcols = list(partition_by or [])
+    entries = _require_farm(target_path, cur, pcols)
+    touched, drop_values = _touched_slice(snap, pcols, snap.filter(cond))
+    # delete feed rows are by definition NOT in the staged result;
+    # deriving them is one more filtered scan of the prior slice
+    deletes = _tag_changes(touched.filter(cond), "delete", next_version)
+    _commit(
+        touched.filter(~cond),
         target_path,
         next_version,
+        keep_snapshots,
         pcols,
         entries,
-        keep_snapshots,
         drop_values,
         changes_builder=(lambda staged: deletes) if change_feed else None,
     )
@@ -2272,8 +2028,6 @@ def update_where(
     would commit a snapshot whose appended (MOR) or rewritten (CoW
     partitioned) files disagree with the manifest schema / the
     carried-forward files' physical type — unreadable at scan time."""
-    import os
-
     cur = _current_snapshot(target_path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {target_path}")
@@ -2287,61 +2041,38 @@ def update_where(
                 "(a partition leaf is one reference; appending into a "
                 "carried partition needs per-file references)"
             )
-        _update_where_mor(
-            spark, target_path, cur, next_version, cond, assignments,
-            keep_snapshots, change_feed,
+        _commit_deletion_vectors(
+            spark, target_path, cur, next_version, cond, keep_snapshots, change_feed,
+            post_image=lambda matched: _schema_preserving_assigned(
+                assignments, cond, matched.schema
+            )(matched),
         )
         return
 
     snap = _read_snapshot(spark, target_path, cur)
     assigned = _schema_preserving_assigned(assignments, cond, snap.schema)
-
-    def feed_builder(next_v: int):
-        pre = _tag_changes(snap.filter(cond), "update_preimage", next_v)
-        post = _tag_changes(assigned(snap.filter(cond)), "update_postimage", next_v)
-        return lambda staged: pre.unionByName(post)
-
-    if not partition_by:
-        _commit_unpartitioned(
-            assigned(snap),
-            target_path,
-            next_version,
-            keep_snapshots,
-            changes_builder=feed_builder(next_version) if change_feed else None,
-        )
-        return
-
-    pcols = list(partition_by)
+    pcols = list(partition_by or [])
     hit = [c for c in assignments if c in pcols]
     if hit:
         raise ValueError(
             f"update_where cannot assign partition columns {hit}; rows would "
             "migrate partitions — use upsert_parquet for keyed moves"
         )
-    entries = _farm_entries(os.path.join(target_path, cur), pcols)
-    if entries is None:
-        raise ValueError(f"{target_path} is not a {pcols}-partitioned snapshot table")
-    touched_vals = snap.filter(cond).select(*pcols).distinct()
-    touched_rows = touched_vals.collect()  # bounded by matching partitions
-    drop_values = {
-        tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows
-    }
-    touched = _rows_in_partitions(snap, touched_rows, touched_vals.schema, pcols)
-
-    def feed_builder_part(next_v: int):
-        pre = _tag_changes(touched.filter(cond), "update_preimage", next_v)
-        post = _tag_changes(assigned(touched.filter(cond)), "update_postimage", next_v)
-        return lambda staged: pre.unionByName(post)
-
-    _commit_partitioned(
+    entries = _require_farm(target_path, cur, pcols)
+    touched, drop_values = _touched_slice(snap, pcols, snap.filter(cond))
+    pre = touched.filter(cond)
+    feed = _tag_changes(pre, "update_preimage", next_version).unionByName(
+        _tag_changes(assigned(pre), "update_postimage", next_version)
+    )
+    _commit(
         assigned(touched),
         target_path,
         next_version,
+        keep_snapshots,
         pcols,
         entries,
-        keep_snapshots,
         drop_values,
-        changes_builder=feed_builder_part(next_version) if change_feed else None,
+        changes_builder=(lambda staged: feed) if change_feed else None,
     )
 
 
@@ -2423,179 +2154,65 @@ def _schema_preserving_assigned(
     return assigned
 
 
-def _update_where_mor(
+def _commit_deletion_vectors(
     spark: SparkSession,
     target_path: str,
     cur: str,
     next_version: int,
     cond: Column,
-    assignments: "dict[str, Column]",
     keep_snapshots: int,
     change_feed: bool,
+    post_image: "object | None" = None,
 ) -> None:
-    """Merge-on-read leg of :func:`update_where`: one commit that (a)
-    deletion-vectors the matched rows out of their existing files and
-    (b) appends their updated images as a fresh data file — reads then
-    reconstruct exactly the post-update state with zero rewrite of
-    existing bytes."""
-    import json
+    """Merge-on-read commit (:func:`delete_where` with
+    ``deletion_vectors=True``; :func:`update_where` with
+    ``merge_on_read=True``): a new snapshot whose DATA is the current
+    snapshot's files (hardlinks / farm references, zero rewrite) and
+    whose ``_dv/`` dir is the union of the existing vectors with the
+    (snapshot-relative file path, row index) coordinates of the rows
+    matching ``cond``.  Matching runs against the DV-APPLIED current
+    state, so re-deleting already-deleted rows is a no-op, and the
+    ordinary claim + pointer swap makes the vector flip atomic.
+
+    ``post_image`` (the update): maps the matched rows to their updated
+    images, which append as a fresh data file in the same commit —
+    reads then reconstruct exactly the post-update state."""
     import os
-    import shutil
 
     snap_dir = os.path.join(target_path, cur)
-    manifest: dict = {}
-    df = None
-    mpath = snap_dir + ".json"
-    if os.path.exists(mpath):
-        with open(mpath) as fh:
-            manifest = json.load(fh)
-        sj = manifest.get("schema")
-        if sj:
-            df = spark.read.schema(T.StructType.fromJson(json.loads(sj))).parquet(snap_dir)
-    if df is None:
-        df = spark.read.parquet(snap_dir)
-        manifest.setdefault("schema", df.schema.json())
-    data_cols = df.columns
-    # pin assignments to the COMMITTED schema: the appended post-image
-    # file must be readable under the manifest schema the carried-
-    # forward files were written with (type widening would poison the
-    # snapshot at scan time)
-    assigned = _schema_preserving_assigned(assignments, cond, df.schema)
-    meta = _file_meta_cols(df)
-    dv_dir = os.path.join(snap_dir, _DV_DIR)
-    existing = None
-    if os.path.isdir(dv_dir):
-        existing = spark.read.parquet(dv_dir).select("file", "row_index")
-        meta = meta.join(
-            existing.select(
-                F.col("file").alias("__dv_file"),
-                F.col("row_index").alias("__dv_idx"),
-            ),
-            on=["__dv_file", "__dv_idx"],
-            how="left_anti",
-        )
-    matched = meta.filter(cond)
-    new_rows = matched.select(
+    manifest, schema = _read_manifest(target_path, cur)
+    df = _scan(spark, snap_dir, schema)
+    manifest.setdefault("schema", df.schema.json())
+    live = _file_meta_cols(df)
+    existing = _dv_coords(spark, snap_dir)
+    if existing is not None:
+        live = live.join(existing, on=["__dv_file", "__dv_idx"], how="left_anti")
+    matched = live.filter(cond)
+    coords = matched.select("__dv_file", "__dv_idx")
+    vectors = (coords if existing is None else existing.unionByName(coords)).select(
         F.col("__dv_file").alias("file"), F.col("__dv_idx").alias("row_index")
     )
-    union_dv = new_rows if existing is None else existing.unionByName(new_rows)
-    pre_rows = matched.select(*data_cols)
-    post_rows = assigned(matched).select(*data_cols)
-
-    stage = _stage_base(next_version)
-    stage_dir = os.path.join(target_path, stage)
-    committed = False
-    try:
-        _link_snapshot_tree(snap_dir, stage_dir, resolve_links=False, keep=())
-        union_dv.write.mode("overwrite").parquet(os.path.join(stage_dir, _DV_DIR))
-        # updated images land as ADDITIONAL part files next to the links
-        post_rows.write.mode("append").parquet(stage_dir)
-        if change_feed:
-            _tag_changes(pre_rows, "update_preimage", next_version).unionByName(
-                _tag_changes(post_rows, "update_postimage", next_version)
-            ).write.mode("overwrite").parquet(os.path.join(stage_dir, "_changes"))
-        manifest = dict(manifest)
-        manifest["version"] = next_version
-        manifest["attempt"] = stage  # ownership check at publish
-        manifest["deletion_vectors"] = True
-        out = os.path.join(target_path, stage + ".json")
-        with open(out + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(out + ".tmp", out)
-        _publish_staged(target_path, next_version, stage, keep_snapshots)
-        committed = True
-    finally:
-        if not committed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(target_path, stage + ".json"))
-            except OSError:
-                pass
-
-
-def _delete_where_dv(
-    spark: SparkSession,
-    target_path: str,
-    cur: str,
-    next_version: int,
-    condition: Column,
-    keep_snapshots: int,
-    change_feed: bool,
-) -> None:
-    """Merge-on-read leg of :func:`delete_where`: commit a new snapshot
-    whose DATA is the current snapshot's files (hardlinks / farm
-    references, zero rewrite) and whose ``_dv/`` dir is the union of
-    the existing vectors with the newly matched rows' (snapshot-relative
-    file path, row index) coordinates.  Matching runs against the DV-APPLIED
-    current state, so re-deleting already-deleted rows is a no-op, and
-    the ordinary claim + pointer swap makes the vector flip atomic."""
-    import json
-    import os
-    import shutil
-
-    snap_dir = os.path.join(target_path, cur)
-    mpath = snap_dir + ".json"
-    manifest: dict = {}
-    df = None
-    if os.path.exists(mpath):
-        with open(mpath) as fh:
-            manifest = json.load(fh)
-        sj = manifest.get("schema")
-        if sj:
-            df = spark.read.schema(
-                T.StructType.fromJson(json.loads(sj))
-            ).parquet(snap_dir)
-    if df is None:
-        df = spark.read.parquet(snap_dir)
-        manifest.setdefault("schema", df.schema.json())
-    meta = _file_meta_cols(df)
-    dv_dir = os.path.join(snap_dir, _DV_DIR)
-    existing = None
-    if os.path.isdir(dv_dir):
-        existing = spark.read.parquet(dv_dir).select("file", "row_index")
-        meta = meta.join(
-            existing.select(
-                F.col("file").alias("__dv_file"),
-                F.col("row_index").alias("__dv_idx"),
-            ),
-            on=["__dv_file", "__dv_idx"],
-            how="left_anti",
+    pre = matched.select(*df.columns)
+    if post_image is None:
+        feed = _tag_changes(pre, "delete", next_version)
+    else:
+        post = post_image(matched).select(*df.columns)
+        feed = _tag_changes(pre, "update_preimage", next_version).unionByName(
+            _tag_changes(post, "update_postimage", next_version)
         )
-    matched = meta.filter(F.coalesce(condition, F.lit(False)))
-    new_rows = matched.select(
-        F.col("__dv_file").alias("file"), F.col("__dv_idx").alias("row_index")
-    )
-    union_dv = new_rows if existing is None else existing.unionByName(new_rows)
 
-    stage = _stage_base(next_version)
-    stage_dir = os.path.join(target_path, stage)
-    committed = False
-    try:
-        # data carries forward by link; vectors are REWRITTEN as the
-        # union (so skip linking the old _dv)
+    with _attempt(target_path, next_version, keep_snapshots) as stage:
+        stage_dir = os.path.join(target_path, stage)
+        # data carries forward by link; the vectors are REWRITTEN as
+        # the union (so the old _dv is not linked)
         _link_snapshot_tree(snap_dir, stage_dir, resolve_links=False, keep=())
-        union_dv.write.mode("overwrite").parquet(os.path.join(stage_dir, _DV_DIR))
+        vectors.write.mode("overwrite").parquet(os.path.join(stage_dir, _DV_DIR))
+        if post_image is not None:
+            # updated images land as ADDITIONAL part files next to the links
+            post.write.mode("append").parquet(stage_dir)
         if change_feed:
-            _tag_changes(
-                matched.drop("__dv_file", "__dv_idx"), "delete", next_version
-            ).write.mode("overwrite").parquet(os.path.join(stage_dir, "_changes"))
-        manifest = dict(manifest)
-        manifest["version"] = next_version
-        manifest["attempt"] = stage  # ownership check at publish
-        manifest["deletion_vectors"] = True
-        out = os.path.join(target_path, stage + ".json")
-        with open(out + ".tmp", "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(out + ".tmp", out)
-        _publish_staged(target_path, next_version, stage, keep_snapshots)
-        committed = True
-    finally:
-        if not committed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            try:
-                os.remove(os.path.join(target_path, stage + ".json"))
-            except OSError:
-                pass
+            feed.write.mode("overwrite").parquet(os.path.join(stage_dir, "_changes"))
+        _write_manifest(target_path, stage, {**manifest, "deletion_vectors": True})
 
 
 def _zorder_column(df: DataFrame, cols: Sequence[str], bits: int = 16) -> Column:
@@ -2684,18 +2301,9 @@ def compact_table(
 
     cur = _current_snapshot(target_path)
     snap_dir = os.path.join(target_path, cur) if cur else target_path
-    size = 0
-    for root, dirs, files in os.walk(snap_dir, followlinks=True):
-        # prune metadata subtrees (_changes/_dv/...): their parquet
-        # bytes are not data — counting a large change feed would
-        # overestimate n_files and emit more, smaller files than
-        # requested, the opposite of the compaction goal
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        size += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if f.endswith(".parquet")
-        )
+    # data files only: counting a large change feed's bytes would
+    # overestimate n_files and emit more, smaller files than requested
+    size = sum(os.path.getsize(f) for f in _data_files(snap_dir))
     n_files = max(1, -(-size // target_file_bytes))  # ceil
     df = _read_snapshot(spark, target_path, cur) if cur else spark.read.parquet(snap_dir)
     next_version = int(cur.lstrip("v")) + 1 if cur else 1
@@ -2713,20 +2321,8 @@ def compact_table(
     else:
         df = df.repartition(n_files)
 
-    if partition_by:
-        # stay in the referenced-partition layout: every partition is
-        # freshly written (no carried-forward entries), farm + manifest
-        _commit_partitioned(
-            df,
-            target_path,
-            next_version,
-            list(partition_by),
-            {},
-            keep_snapshots,
-        )
-        return n_files
-
-    _commit_unpartitioned(df, target_path, next_version, keep_snapshots)
+    # a full rewrite: every partition is freshly written, none carried
+    _commit(df, target_path, next_version, keep_snapshots, list(partition_by or []))
     return n_files
 
 
@@ -2838,6 +2434,12 @@ def scd2_from_change_feed(
     single-shuffle SCD2 merge over that commit's change rows).  A 100 TB
     fact table's dimension history therefore accrues per batch from
     batch-sized change files; the base table is never rescanned.
+
+    The returned dimension is LAZY in its last commit: every earlier
+    commit is checkpointed, but the final merge runs inside each action
+    on the result.  A caller that runs more than one action (count,
+    then write; collect, then join) re-runs that merge every time, so
+    it should ``persist()`` (or checkpoint) the result first.
     """
     # persisted (r16): the consumers below read the feed several times
     # (version list, per-commit upsert legs, delete legs) — without the
@@ -3162,56 +2764,35 @@ def apply_changes_parquet(
     import os
 
     keys = list(keys)
+    pcols = list(partition_by or [])
     data_cols = [c for c in changes.columns if c not in (op_col, seq_col)]
+    batch = changes.select(*data_cols)
     cur = _current_snapshot(target_path)
-
-    def _require_feed_covers(table_cols: "list[str]") -> None:
-        # a feed narrower than the table would make snap.select(
-        # *data_cols) silently drop the missing columns from the
-        # committed result — column loss, not replication
-        missing = [c for c in table_cols if c not in data_cols]
-        if missing:
-            raise ValueError(
-                "apply_changes_parquet: change feed lacks table "
-                f"column(s) {missing}; a replication feed must carry "
-                "every target column"
-            )
     if cur is None:
-        merged = apply_changes(
-            changes.select(*data_cols).limit(0), changes, keys, op_col, seq_col
-        )
-        if partition_by:
-            _commit_partitioned(merged, target_path, 1, list(partition_by), {}, keep_snapshots)
-        else:
-            _commit_unpartitioned(merged, target_path, 1, keep_snapshots)
+        merged = apply_changes(batch.limit(0), changes, keys, op_col, seq_col)
+        _commit(merged, target_path, 1, keep_snapshots, pcols)
         return
-    next_version = int(cur.lstrip("v")) + 1
     snap = _read_snapshot(spark, target_path, cur)
-    _require_feed_covers(snap.columns)
-    if not partition_by:
-        merged = apply_changes(snap.select(*data_cols), changes, keys, op_col, seq_col)
-        _commit_unpartitioned(merged, target_path, next_version, keep_snapshots)
-        return
-    pcols = list(partition_by)
-    entries = _farm_entries(os.path.join(target_path, cur), pcols)
-    if entries is None:
-        raise ValueError(f"{target_path} is not a {pcols}-partitioned snapshot table")
-    batch_rows = changes.select(*data_cols)
-    touched_vals = _touched_partitions(snap, batch_rows, keys, pcols, False)
-    touched_rows = touched_vals.collect()  # bounded by touched partitions
-    drop_values = {tuple(_normalize_value(r[pc]) for pc in pcols) for r in touched_rows}
-    touched = _rows_in_partitions(snap, touched_rows, touched_vals.schema, pcols)
-    for pc in pcols:
-        touched = touched.withColumn(pc, F.col(pc).cast(batch_rows.schema[pc].dataType))
-    touched = touched.select(*data_cols)
-    merged = apply_changes(touched, changes, keys, op_col, seq_col)
-    _commit_partitioned(
+    # a feed narrower than the table would make snap.select(*data_cols)
+    # silently drop the missing columns from the committed result —
+    # column loss, not replication
+    missing = [c for c in snap.columns if c not in data_cols]
+    if missing:
+        raise ValueError(
+            "apply_changes_parquet: change feed lacks table "
+            f"column(s) {missing}; a replication feed must carry "
+            "every target column"
+        )
+    entries = _require_farm(target_path, cur, pcols)
+    touched, drop_values = _touched_slice(snap, pcols, batch, stale_keys=keys)
+    merged = apply_changes(touched.select(*data_cols), changes, keys, op_col, seq_col)
+    _commit(
         merged,
         target_path,
-        next_version,
+        int(cur.lstrip("v")) + 1,
+        keep_snapshots,
         pcols,
         entries,
-        keep_snapshots,
         drop_values,
     )
 

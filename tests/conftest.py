@@ -30,3 +30,28 @@ def sf_dir() -> str:
 @pytest.fixture()
 def tmp_parquet_dir(tmp_path):
     return str(tmp_path / "table")
+
+
+@pytest.fixture()
+def assert_no_attempt_leftovers():
+    """Checker for a snapshot table dir after a commit that did not
+    land: no staging dir or manifest (``*.stage-*``), no ``*.claim``
+    token, and ``data/`` holds only pools the current manifest
+    references."""
+    import json
+
+    def check(table_dir: str) -> None:
+        entries = os.listdir(table_dir)
+        leftovers = [e for e in entries if ".stage-" in e or e.endswith(".claim")]
+        assert not leftovers, leftovers
+        pool_root = os.path.join(table_dir, "data")
+        if os.path.isdir(pool_root):
+            with open(os.path.join(table_dir, "_LATEST")) as fh:
+                cur = fh.read().strip()
+            with open(os.path.join(table_dir, cur + ".json")) as fh:
+                partitions = json.load(fh).get("partitions") or {}
+            referenced = {rel.split(os.sep)[1] for rel in partitions.values()}
+            pools = set(os.listdir(pool_root))
+            assert pools <= referenced, (pools, referenced)
+
+    return check

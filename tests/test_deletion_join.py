@@ -168,6 +168,10 @@ def test_variant_kernel_keep_cols_trims_payload(spark, max_d):
     want = {(r["id"], r["_variant"]) for r in full.collect()}
     got = {(r["id"], r["_variant"]) for r in trimmed.collect()}
     assert got == want
+    # a typo in keep_cols is a loud error naming the column, not a
+    # silently narrower payload that fails later downstream
+    with pytest.raises(ValueError, match="nmae"):
+        _deletion_variant_rows(df, "name", max_d, keep_cols=["id", "nmae"])
 
 
 def test_rejects_unsupported_distance_and_policy(spark):

@@ -488,7 +488,7 @@ def test_partitioned_upsert_recovers_from_crash_leftovers(spark, tmp_path):
     assert not os.path.exists(os.path.join(target, "v00000002.build"))
 
 
-def test_write_audit_publish_gate_partitioned(spark, tmp_path):
+def test_write_audit_publish_gate_partitioned(spark, tmp_path, assert_no_attempt_leftovers):
     import pytest
 
     target = str(tmp_path / "wap")
@@ -507,6 +507,8 @@ def test_write_audit_publish_gate_partitioned(spark, tmp_path):
     with pytest.raises(ValueError):
         upsert_parquet(spark, bad, target, keys=["id"], partition_by=["part"], audit=reject)
     assert read_parquet_table(spark, target).count() == 2  # still v1
+    # the rejected attempt's farm, manifest and data pool are gone
+    assert_no_attempt_leftovers(target)
 
     ok = spark.createDataFrame([(3, "a", 3.0)], "id long, part string, v double")
     upsert_parquet(spark, ok, target, keys=["id"], partition_by=["part"], audit=reject)

@@ -428,9 +428,10 @@ def test_upsert_without_evolution_rejects_new_columns_loudly(spark, tmp_parquet_
         upsert_parquet(spark, bad, tmp_parquet_dir, ["shop_id"])
 
 
-def test_write_audit_publish_gate(spark, tmp_parquet_dir):
+def test_write_audit_publish_gate(spark, tmp_parquet_dir, assert_no_attempt_leftovers):
     """audit: a raising validation aborts the commit BEFORE the pointer
-    swap — readers keep the previous version; a passing audit publishes."""
+    swap — readers keep the previous version and the attempt's staging
+    is removed; a passing audit publishes."""
     import pytest
 
     upsert_parquet(spark, _target(spark), tmp_parquet_dir, ["shop_id"])
@@ -446,6 +447,7 @@ def test_write_audit_publish_gate(spark, tmp_parquet_dir):
         upsert_parquet(spark, bad, tmp_parquet_dir, ["shop_id"], audit=reject)
     # table unchanged: still version 1, bad row never visible
     assert {r["shop_id"] for r in read_parquet_table(spark, tmp_parquet_dir).collect()} == {"s1", "s2"}
+    assert_no_attempt_leftovers(tmp_parquet_dir)
 
     upsert_parquet(spark, _updates(spark), tmp_parquet_dir, ["shop_id"], audit=reject)
     assert {r["shop_id"] for r in read_parquet_table(spark, tmp_parquet_dir).collect()} == {"s1", "s2", "s3"}
